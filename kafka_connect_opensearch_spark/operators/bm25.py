@@ -53,32 +53,19 @@ def bm25_tf_weight(tf, dl, avgdl: float, k1: float, b: float):
 
 
 class IndexReader:
-    """Query-side view of an index directory.
+    """Query-side view of an index directory."""
 
-    ``use_dsv2=True`` routes term-restricted distributed reads through
-    the DSv2 segment relation (sources/segment_scan.py — ONE BatchScan,
-    term/seg filters absorbed). Default False: the measured Python-scan
-    tax (~2-3× vs the JVM parquet scan at every size we can measure, see
-    BENCH/DSV2.md) makes the classic pushed-filter union the faster
-    plan; the per-query dataset-discovery cost that motivated DSv2 is
-    eliminated by caching the resolved DataFrame per manifest snapshot
-    instead."""
-
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 use_dsv2: bool = False):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.store = SegmentStore(index_dir)
         meta = self.store.meta()
         self.k1 = float(meta["k1"])
         self.b = float(meta["b"])
         self.block_size = int(meta.get("block_size", 128))
-        self._use_dsv2 = use_dsv2
         self._segments = self.store.active_segments()
         self._stats = self.store.global_stats()
         self._datasets = None  # lazy pyarrow dataset handles
-        self._scan_files: dict[str, list] = {}  # DSv2 pinned file lists
         self._df_cache: dict[str, DataFrame] = {}  # resolved-scan reuse
-        self._dsv2_ok: bool | None = None
         # per-snapshot memos for the coordinator query path: term → df
         # (dictionary lookups) and term → packed postings rows (the
         # pyarrow fetch) — both cleared wholesale on refresh()
@@ -109,7 +96,6 @@ class IndexReader:
         self._segments = self.store.active_segments()
         self._stats = self.store.global_stats()
         self._datasets = None
-        self._scan_files = {}
         self._df_cache = {}
         self._stats_cache = {}
         self._rows_cache = {}
@@ -122,34 +108,31 @@ class IndexReader:
         self._live_broadcasts = []
 
     def _postings_datasets(self):
-        """Cached pyarrow datasets for the coordinator paths — dataset
-        discovery (file listing, Hive partition inference) costs hundreds
-        of ms on a many-file index and must not be paid per query."""
+        """Cached (pyarrow dataset, seg filter) per root for the
+        coordinator paths — dataset discovery (file listing, Hive
+        partition inference) costs hundreds of ms on a many-file index
+        and must not be paid per query."""
         if self._datasets is None:
             import pyarrow.dataset as pads
 
-            scans = []
-            bulk: dict[str, list[str]] = {}
-            for s in self._segments:
-                if s.path:
-                    bulk.setdefault(s.path, []).append(s.name)
-                else:
-                    scans.append(
-                        (
-                            f"{self.store.segment_path(s.name)}"
-                            "/postings.parquet",
-                            None,
-                        )
-                    )
-            scans += [
-                (f"{root}/postings.parquet", names)
-                for root, names in bulk.items()
-            ]
             self._datasets = [
-                (pads.dataset(p, format="parquet", partitioning="hive"), names)
-                for p, names in scans
+                (
+                    pads.dataset(f"{root}/postings.parquet",
+                                 format="parquet", partitioning="hive"),
+                    pads.field("seg").isin(names),
+                )
+                for root, names in self.store.roots(self._segments).items()
             ]
         return self._datasets
+
+    def _postings_tables(self, columns=None, flt=None):
+        """Coordinator fetch: one pyarrow table per root with the active
+        segments' postings rows matching ``flt``."""
+        for dset, seg_flt in self._postings_datasets():
+            yield dset.to_table(
+                columns=columns,
+                filter=seg_flt if flt is None else flt & seg_flt,
+            )
 
     # D7: _count parity (OpenSearchHelperClient.java:85-88)
     def doc_count(self) -> int:
@@ -161,15 +144,7 @@ class IndexReader:
         The resolved scan DataFrame is cached per manifest snapshot, so
         file listing / schema resolution is paid once per snapshot, not
         per query (the many-segment-store discovery cost VERDICT r4 #1
-        targeted); the term filter is pushed into the parquet scan.
-        With ``use_dsv2=True`` term-restricted reads instead go through
-        the DSv2 segment relation: ONE BatchScan node, filter absorbed
-        as ``PushedFilters`` (plan-pinned in tests/test_plans.py),
-        measured slower than this default (BENCH/DSV2.md)."""
-        if terms is not None and self._use_dsv2:
-            df = self._segment_scan("postings")
-            if df is not None:
-                return df.filter(F.col("term").isin(list(terms)))
+        targeted); the term filter is pushed into the parquet scan."""
         if "postings" not in self._df_cache:
             self._df_cache["postings"] = self.store.read_postings(
                 self.spark, self._segments
@@ -178,28 +153,6 @@ class IndexReader:
         if terms is not None:
             df = df.filter(F.col("term").isin(list(terms)))  # pushed to scan
         return df
-
-    def _segment_scan(self, kind: str):
-        """The one-scan-node DSv2 relation over the pinned snapshot, or
-        ``None`` when the Python-datasource pushdown conf can't be
-        enabled (classic union read takes over)."""
-        from kafka_connect_opensearch_spark.sources import segment_scan
-
-        if self._dsv2_ok is False:
-            return None
-        if kind not in self._scan_files:
-            self._scan_files[kind] = segment_scan.segment_files(
-                self.store, self._segments, kind
-            )
-        try:
-            df = segment_scan.scan_df(
-                self.spark, kind, self._scan_files[kind]
-            )
-            self._dsv2_ok = True
-            return df
-        except Exception:
-            self._dsv2_ok = False
-            return None
 
     def docs(self) -> DataFrame:
         return self.store.read_docs(self.spark, self._segments)
@@ -219,11 +172,9 @@ class IndexReader:
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
             out: dict[str, int] = dict.fromkeys(missing, 0)
-            for dset, names in self._postings_datasets():
-                flt = pads.field("term").isin(missing)
-                if names is not None:
-                    flt = flt & pads.field("seg").isin(names)
-                tbl = dset.to_table(columns=["term", "df"], filter=flt)
+            for tbl in self._postings_tables(
+                ["term", "df"], pads.field("term").isin(missing)
+            ):
                 for t, d in zip(
                     tbl["term"].to_pylist(), tbl["df"].to_pylist(),
                     strict=True,
@@ -725,13 +676,10 @@ class IndexReader:
         if not present:
             return empty
         found: dict[str, tuple[int, int]] = {}
-        for dset, names in self._postings_datasets():
-            flt = pads.field("term").isin(present)
-            if names is not None:
-                flt = flt & pads.field("seg").isin(names)
-            tbl = dset.to_table(
-                columns=["term", "doc_ids", "tfs", "dls"], filter=flt
-            )
+        for tbl in self._postings_tables(
+            ["term", "doc_ids", "tfs", "dls"],
+            pads.field("term").isin(present),
+        ):
             for i in range(tbl.num_rows):
                 t = tbl["term"][i].as_py()
                 ids, tfs = codec.decode_postings(
@@ -790,11 +738,10 @@ class IndexReader:
 
         upper = prefix[:-1] + chr(ord(prefix[-1]) + 1)
         terms: set[str] = set()
-        for dset, names in self._postings_datasets():
-            flt = (pads.field("term") >= prefix) & (pads.field("term") < upper)
-            if names is not None:
-                flt = flt & pads.field("seg").isin(names)
-            tbl = dset.to_table(columns=["term"], filter=flt)
+        for tbl in self._postings_tables(
+            ["term"],
+            (pads.field("term") >= prefix) & (pads.field("term") < upper),
+        ):
             terms.update(tbl["term"].to_pylist())
         return sorted(terms)[:max_terms]
 
@@ -826,16 +773,8 @@ class IndexReader:
         lo, hi = len(term) - max_edits, len(term) + max_edits
         vocab_rows = sum(s.n_terms for s in self._segments)
         if vocab_rows <= local_threshold:
-            import pyarrow.dataset as pads
-
             cand: set[str] = set()
-            for dset, names in self._postings_datasets():
-                flt = (
-                    pads.field("seg").isin(names)
-                    if names is not None
-                    else None
-                )
-                tbl = dset.to_table(columns=["term"], filter=flt)
+            for tbl in self._postings_tables(["term"]):
                 cand.update(tbl["term"].to_pylist())
             in_window = sorted(t for t in cand if lo <= len(t) <= hi)
             if transpositions:
@@ -900,17 +839,13 @@ class IndexReader:
             import pyarrow.dataset as pads
 
             cand: set[str] = set()
-            for dset, names in self._postings_datasets():
-                flt = None
-                if lead:
-                    upper = lead[:-1] + chr(ord(lead[-1]) + 1)
-                    flt = (pads.field("term") >= lead) & (
-                        pads.field("term") < upper
-                    )
-                if names is not None:
-                    seg_f = pads.field("seg").isin(names)
-                    flt = seg_f if flt is None else flt & seg_f
-                tbl = dset.to_table(columns=["term"], filter=flt)
+            flt = None
+            if lead:
+                upper = lead[:-1] + chr(ord(lead[-1]) + 1)
+                flt = (pads.field("term") >= lead) & (
+                    pads.field("term") < upper
+                )
+            for tbl in self._postings_tables(["term"], flt):
                 cand.update(tbl["term"].to_pylist())
             rx = _re.compile(f"^{regex}$")
             return sorted(t for t in cand if rx.match(t))[:max_terms]
@@ -974,17 +909,13 @@ class IndexReader:
             import pyarrow.dataset as pads
 
             cand: set[str] = set()
-            for dset, names in self._postings_datasets():
-                flt = None
-                if lead:
-                    upper = lead[:-1] + chr(ord(lead[-1]) + 1)
-                    flt = (pads.field("term") >= lead) & (
-                        pads.field("term") < upper
-                    )
-                if names is not None:
-                    seg_f = pads.field("seg").isin(names)
-                    flt = seg_f if flt is None else flt & seg_f
-                tbl = dset.to_table(columns=["term"], filter=flt)
+            flt = None
+            if lead:
+                upper = lead[:-1] + chr(ord(lead[-1]) + 1)
+                flt = (pads.field("term") >= lead) & (
+                    pads.field("term") < upper
+                )
+            for tbl in self._postings_tables(["term"], flt):
                 cand.update(tbl["term"].to_pylist())
             rx = _re.compile(f"^(?:{regex})$")
             return sorted(t for t in cand if rx.match(t))[:max_terms]
@@ -1411,11 +1342,9 @@ class IndexReader:
                 missing.append(t)
         if missing:
             parts = []
-            for dset, names in self._postings_datasets():
-                flt = pads.field("term").isin(missing)
-                if names is not None:
-                    flt = flt & pads.field("seg").isin(names)
-                tbl = dset.to_table(filter=flt)
+            for tbl in self._postings_tables(
+                None, pads.field("term").isin(missing)
+            ):
                 if tbl.num_rows:
                     parts.append(tbl.to_pandas())
             fetched = (

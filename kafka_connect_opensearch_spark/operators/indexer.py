@@ -1,15 +1,22 @@
 """Inverted-index build: salted, resumable, explode-free (SURVEY.md D2-D4).
 
-Two build modes share one pipeline shape:
+Every segment — built, streamed or merged — is written by ONE writer,
+:func:`write_segments`: docs/postings Hive-partitioned by ``seg`` and
+positions by (``seg``, ``rb``) under a fresh root, per-segment stats taken
+from Observations riding the write jobs. Its callers differ only in the
+frames they feed it:
 
 - :func:`build_index` — micro-batched (one batch → one immutable segment,
-  mirroring the connector's bulk-flush unit, OpenSearchClient.java:145-155);
-  resumable per batch via the manifest.
+  mirroring the connector's bulk-flush unit, OpenSearchClient.java:145-155),
+  built in waves of ``ingest_wave_size`` batches per pipeline; resumable
+  per batch via the manifest.
 - :func:`build_index_bulk` — ALL segments in one pipeline (initial-load
-  path): one scan, one doc shuffle, one packed-partials shuffle, Hive
-  ``seg=<name>``-partitioned writes, single atomic commit.
+  path), single atomic commit.
+- streaming ingest — a one-segment wave per micro-batch.
+- ``merge.merge_segments`` — stored packed rows (disjoint fast path) or
+  re-packed survivors (latest-wins / delete path).
 
-Pipeline:
+Build pipeline:
 
   source
     → identity (doc_key/doc_id/sha256 — cheap JVM exprs)
@@ -20,8 +27,9 @@ Pipeline:
     → tokenize (regexp_extract_all, whole-stage codegen)
     → level-1 pack (mapInArrow): pyarrow dictionary_encode counts terms —
       NO explode, no Python string objects; emits delta+varint packed
-      partial posting lists, one row per (term, partition)
-    → shuffle packed partials by term (~20× fewer bytes than raw rows)
+      partial posting lists, one row per (seg, term, partition)
+    → shuffle packed partials by (seg, term) (~20× fewer bytes than raw
+      rows)
     → level-2 merge (sorted-run mapInPandas): concat-decode, reset-cumsum,
       re-encode + per-block max_tf; output stays term-sorted per file so
       parquet row-group min/max stats prune query-time term lookups
@@ -151,32 +159,6 @@ def _pack_partial_stream(
         yield _pack_rows(chunk)
 
 
-def _pack_docs_direct(batches):
-    """(doc_id, dl, tokens) Arrow batches → packed partial postings.
-
-    The level-1 aggregation happens inside the doc-partitioned scan stage
-    with NO explode and NO Python string objects: the token lists stay in
-    Arrow, ``dictionary_encode`` (C++) replaces per-token Python work, and
-    everything after is int64 numpy. The shuffle that follows carries one
-    *packed binary* row per (term, partition) — ~20× fewer bytes than raw
-    (doc, term, tf) rows — and the 5×-corpus-size occurrence stream never
-    materializes anywhere.
-
-    Used via ``DataFrame.mapInArrow`` (input/output are pyarrow
-    RecordBatches).
-    """
-    import pyarrow as pa
-
-    for rb in batches:
-        out = _pack_doc_group_arrow(
-            rb.column("doc_id"),
-            rb.column("dl"),
-            rb.column("tokens"),
-        )
-        if out is not None:
-            yield pa.RecordBatch.from_arrays(out, names=PARTIAL_COLS)
-
-
 def _pack_doc_group_arrow(doc_id_arr, dl_arr, tokens_arr):
     """Core level-1 pack on Arrow arrays; returns [term, doc_ids, tfs, dls]
     Arrow arrays or None for an empty group."""
@@ -238,8 +220,15 @@ def _pack_doc_group_arrow(doc_id_arr, dl_arr, tokens_arr):
 
 
 def _pack_docs_direct_by_seg(batches):
-    """Seg-aware level-1 pack (mapInArrow): input batches carry a ``seg``
-    column; each seg group within a batch packs independently (bulk path)."""
+    """(seg, doc_id, dl, tokens) Arrow batches → packed partial postings,
+    each seg group within a batch packed independently (mapInArrow).
+
+    The level-1 aggregation happens inside the doc-partitioned scan stage
+    with NO explode and NO Python string objects: the token lists stay in
+    Arrow, ``dictionary_encode`` (C++) replaces per-token Python work, and
+    everything after is int64 numpy. The shuffle that follows carries one
+    *packed binary* row per (seg, term, partition), and the
+    5×-corpus-size occurrence stream never materializes anywhere."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -260,21 +249,16 @@ def _pack_docs_direct_by_seg(batches):
                 )
 
 
-def _make_merge_stream(seg_name: str | None, block_size: int):
+def _make_merge_stream(block_size: int):
     """Level-2 merge, vectorized across the whole chunk: all partial rows'
     buffers decode in ONE pass per column (varint_decode_concat), doc_ids
-    reconstruct with reset-cumsum, one lexsort regroups by term, and all
-    posting lists + block maxima re-encode in one pass per column.
-
-    ``seg_name``: stamp this segment name (classic per-segment build), or
-    None → partials carry a ``seg`` column and groups key on (seg, term)
-    (bulk build)."""
-    group_key = "term" if seg_name is not None else ["seg", "term"]
+    reconstruct with reset-cumsum, one lexsort regroups by (seg, term), and
+    all posting lists + block maxima re-encode in one pass per column."""
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        for chunk in _stream_groups(batches, group_key):
+        for chunk in _stream_groups(batches, ["seg", "term"]):
             row_terms = chunk["term"].to_numpy()
             d_vals, d_row = codec.varint_decode_concat(list(chunk["doc_ids"]))
             t_vals, _ = codec.varint_decode_concat(list(chunk["tfs"]))
@@ -290,13 +274,12 @@ def _make_merge_stream(seg_name: str | None, block_size: int):
             ids = codec.cumsum_with_resets(d_vals, run_starts)
             tfs = t_vals.view("int64")
             dls = l_vals.view("int64")
-            # regroup by (seg,)term: group index of each value via its row
+            # regroup by (seg, term): group index of each value via its row
+            row_segs = chunk["seg"].to_numpy()
             row_change = np.empty(row_terms.size, dtype=bool)
             row_change[0] = True
             np.not_equal(row_terms[1:], row_terms[:-1], out=row_change[1:])
-            if seg_name is None:
-                row_segs = chunk["seg"].to_numpy()
-                row_change[1:] |= row_segs[1:] != row_segs[:-1]
+            row_change[1:] |= row_segs[1:] != row_segs[:-1]
             row_gidx = np.cumsum(row_change) - 1
             v_gidx = row_gidx[d_row]
             order = np.lexsort((ids, v_gidx))
@@ -325,8 +308,7 @@ def _make_merge_stream(seg_name: str | None, block_size: int):
             yield pd.DataFrame(
                 {
                     "term": row_terms[group_rows],
-                    "seg": seg_name if seg_name is not None
-                    else chunk["seg"].to_numpy()[group_rows],
+                    "seg": row_segs[group_rows],
                     "df": dfs.astype("int64"),
                     "max_tf": max_tf.astype("int64"),
                     "doc_ids": codec.varint_encode_grouped(
@@ -347,53 +329,16 @@ def _make_merge_stream(seg_name: str | None, block_size: int):
     return merge
 
 
-def build_segment_postings_from_docs(
-    analyzed: DataFrame, seg_name: str, config: EngineConfig
+def merge_partials(
+    partial: DataFrame, config: EngineConfig, n_parts: int
 ) -> DataFrame:
-    """(doc_id, dl, tokens) → packed postings rows, explode-free.
-
-    Level 1 is :func:`_pack_docs_direct` inside the doc-partitioned stage —
-    the doc-hash partitioning plays the salt role (a hot term's postings
-    split across all partitions; no reducer sees more than a partition's
-    worth at level 1). Level 2 shuffles only packed partials by term.
-    Per-term level-2 group size is bounded by the segment's doc count —
-    the same bound Lucene accepts for per-segment posting lists.
-    """
-    partial = analyzed.select("doc_id", "dl", "tokens").mapInArrow(
-        _pack_docs_direct, schema=PARTIAL_SCHEMA
-    )
-    l2 = partial.repartition(
-        max(2, config.shuffle_partitions // 4), "term"
-    ).sortWithinPartitions("term")
-    return l2.mapInPandas(
-        _make_merge_stream(seg_name, config.block_size), schema=POSTINGS_SCHEMA
-    )
-
-
-def build_segment_postings(
-    doc_term_df: DataFrame, seg_name: str, config: EngineConfig
-) -> DataFrame:
-    """(doc_id, dl, term, tf) → packed postings rows (POSTINGS_SCHEMA).
-
-    Two sort-based levels, one Python invocation per *partition* (not per
-    group): level 1 hash-partitions on (term, salt(doc_id)) — bounding the
-    largest reducer for stopword terms — and stream-packs sorted runs;
-    level 2 hash-partitions partials on term and stream-merges. Both
-    shuffles carry packed binary, so level 2 moves ~salt_partitions rows
-    per term regardless of posting-list length.
-    """
-    salted = doc_term_df.withColumn(
-        "_salt", F.pmod(F.col("doc_id"), F.lit(config.salt_partitions))
-    )
-    l1 = salted.repartition(
-        config.shuffle_partitions, "term", "_salt"
-    ).sortWithinPartitions("term", "_salt", "doc_id")
-    partial = l1.mapInPandas(_pack_partial_stream, schema=PARTIAL_SCHEMA)
-    l2 = partial.repartition(
-        max(2, config.shuffle_partitions // 4), "term"
-    ).sortWithinPartitions("term")
-    return l2.mapInPandas(
-        _make_merge_stream(seg_name, config.block_size), schema=POSTINGS_SCHEMA
+    """Level 2: packed partial rows (term, seg, doc_ids, tfs, dls — any
+    number per (seg, term)) → one POSTINGS_SCHEMA row per (seg, term),
+    hash-partitioned and sorted on (seg, term) so written files carry
+    sorted term runs (row-group min/max stats prune term lookups)."""
+    l2 = partial.repartition(max(2, n_parts), "seg", "term")
+    return l2.sortWithinPartitions("seg", "term").mapInPandas(
+        _make_merge_stream(config.block_size), schema=POSTINGS_SCHEMA
     )
 
 
@@ -486,7 +431,8 @@ def build_index(
 
     ``fail_after_batches`` is a fault-injection hook for the kill/resume
     test (mirrors the reference's offset-safety ITs,
-    integration/OpenSearchSinkTaskIT.java:120-165).
+    integration/OpenSearchSinkTaskIT.java:120-165): the build raises
+    after that many manifest commits.
     """
     config = config or EngineConfig()
     t0 = time.monotonic()
@@ -507,11 +453,11 @@ def build_index(
 
     if len(pending) > 1:
         # Stage the identity-stamped source ONCE, Hive-partitioned by
-        # _batch, so each micro-batch reads exactly one partition
-        # (partition pruning) instead of rescanning + re-hashing the full
-        # source per segment — previously num_segments full scans. Only
-        # the columns the segment build consumes are staged (identity +
-        # content); everything else is pruned at the staging write.
+        # _batch, so each wave reads exactly its partitions (partition
+        # pruning) instead of rescanning + re-hashing the full source per
+        # wave. Only the columns the segment build consumes are staged
+        # (identity + content); everything else is pruned at the staging
+        # write.
         staging = os.path.join(index_dir, "staging")
         needed = ["doc_id", "doc_key", "content_sha256", content_col]
         docs.select(*needed, "_batch").write.partitionBy("_batch").mode(
@@ -519,100 +465,42 @@ def build_index(
         ).parquet(staging)
         docs = spark.read.parquet(staging)
 
-    def run_batch(b: int) -> SegmentMeta:
-        batch_id = f"b{b:04d}"
-        seg_name = f"seg_g0_{batch_id}"
-        seg_meta = _build_one_segment(
-            spark, docs.filter(F.col("_batch") == b), store, seg_name, config,
-            content_col=content_col,
-        )
-        # manifest rename is the commit point (O4); wrapped in the
-        # reference's retry envelope (B5) for transient FS errors.
-        call_with_retries(
-            f"commit {batch_id}",
-            lambda: store.commit_batch(
-                batch_id,
-                {"batch": batch_id, "segments": [seg_meta.__dict__],
-                 "replaces": []},
+    # Wave (group) commit: build `ingest_wave_size` pending batches in ONE
+    # pipeline (one scan of the staged source, one doc shuffle, one
+    # partials shuffle), then commit each batch's manifest individually.
+    # This is the reference's BulkProcessor grouping
+    # (OpenSearchClient.java:145-155): durability granularity stays the
+    # micro-batch (a crash mid-wave re-runs only that wave's uncommitted
+    # batches), but per-job fixed latency is paid once per wave.
+    generation = store.next_generation()
+    commits = 0
+    for wi in range(0, len(pending), config.ingest_wave_size):
+        wave = pending[wi:wi + config.ingest_wave_size]
+        seg_names = [f"seg_g0_b{b:04d}" for b in wave]
+        wave_docs = docs.filter(
+            F.col("_batch").isin([int(b) for b in wave])
+        ).withColumn(
+            "seg",
+            F.concat(
+                F.lit("seg_g0_b"),
+                F.lpad(F.col("_batch").cast("string"), 4, "0"),
             ),
-            max_retries=config.max_retries,
-            retry_backoff_ms=config.retry_backoff_ms,
+        ).drop("_batch")
+        metas, _ = _build_segments_pipeline(
+            wave_docs, store.bulk_path(f"g0w{wave[0]:04d}"), config,
+            content_col,
+            job_tag=f"wave_{os.path.basename(index_dir)}_{wave[0]:04d}",
+            seg_names=seg_names,
+            generation=generation,
         )
-        return seg_meta
-
-    if fail_after_batches is not None:
-        # fault-injection path stays sequential so "fail after N commits"
-        # is deterministic (kill/resume tests)
-        for done, b in enumerate(pending):
-            if done >= fail_after_batches:
+        for b, seg_meta in zip(wave, metas, strict=True):
+            if commits == fail_after_batches:
                 raise RuntimeError(
-                    f"fault injection: stopping after {done} batches"
+                    f"fault injection: stopping after {commits} batches"
                 )
-            _accumulate(metrics, run_batch(b))
-    elif config.build_concurrency > 1:
-        # Optional: micro-batch builds from concurrent driver threads —
-        # the connector's in-flight-bulks shape (B2, OpenSearchClient.java:
-        # 124,145-155). Off by default: one Spark job already spans the
-        # cluster, and concurrent Python-UDF stages contend for the
-        # per-executor python-worker pool (measured 2.7× slowdown at 5
-        # concurrent jobs on local[32]). Useful when segments are tiny.
-        from concurrent.futures import ThreadPoolExecutor
-
-        workers = min(config.build_concurrency, len(pending))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            for seg_meta in pool.map(run_batch, pending):
-                _accumulate(metrics, seg_meta)
-    else:
-        # Wave (group) commit: build `ingest_wave_size` pending batches in
-        # ONE pipeline (the bulk shape — one scan of the staged source, one
-        # doc shuffle, one partials shuffle), then commit each batch's
-        # manifest individually. This is the reference's BulkProcessor
-        # grouping (OpenSearchClient.java:145-155): durability granularity
-        # stays the micro-batch (a crash mid-wave re-runs only that wave),
-        # but per-job fixed latency is paid once per wave, not per batch.
-        # Single-batch waves run through the SAME pipeline (no classic
-        # special case): one code path means one set of pack/merge UDFs
-        # and one generated-code shape, so a small warm-up build primes
-        # the python workers and codegen cache for every later build —
-        # the r6 stage isolation showed the by-seg pipeline's first run
-        # paying ~3 s of cold start that the classic-path warm-up never
-        # touched.
-        wave_size = max(1, config.ingest_wave_size)
-        for wi in range(0, len(pending), wave_size):
-            wave = pending[wi:wi + wave_size]
-            root = store.bulk_path(f"g0w{wave[0]:04d}")
-            wave_docs = docs.filter(
-                F.col("_batch").isin([int(b) for b in wave])
-            ).withColumn(
-                "seg",
-                F.concat(
-                    F.lit("seg_g0_b"),
-                    F.lpad(F.col("_batch").cast("string"), 4, "0"),
-                ),
-            ).drop("_batch")
-            metas, _ = _build_segments_pipeline(
-                spark, wave_docs, root, config, content_col,
-                job_tag=f"wave_{os.path.basename(index_dir)}_{wave[0]:04d}",
-                seg_names=[f"seg_g0_b{b:04d}" for b in wave],
-            )
-            by_name = {m.name: m for m in metas}
-            for b in wave:
-                batch_id = f"b{b:04d}"
-                seg_meta = by_name.get(f"seg_g0_{batch_id}") or SegmentMeta(
-                    name=f"seg_g0_{batch_id}", generation=0, doc_count=0,
-                    sum_dl=0, n_terms=0, n_postings=0, path=root,
-                )
-                call_with_retries(
-                    f"commit {batch_id}",
-                    lambda batch_id=batch_id, seg_meta=seg_meta: store.commit_batch(
-                        batch_id,
-                        {"batch": batch_id, "segments": [seg_meta.__dict__],
-                         "replaces": []},
-                    ),
-                    max_retries=config.max_retries,
-                    retry_backoff_ms=config.retry_backoff_ms,
-                )
-                _accumulate(metrics, seg_meta)
+            commit_segments(store, f"b{b:04d}", [seg_meta], config)
+            commits += 1
+            _accumulate(metrics, seg_meta)
 
     metrics.wall_secs = time.monotonic() - t0
     return metrics
@@ -665,21 +553,14 @@ def build_index_bulk(
         ),
     )
     metas, obs = _build_segments_pipeline(
-        spark, docs, root, config, content_col, job_tag=bulk_id,
+        docs, root, config, content_col, job_tag=bulk_id,
         seg_names=[
             f"seg_{tag}_b{b:04d}" for b in range(config.num_segments)
         ],
+        generation=store.next_generation(),
     )
-    call_with_retries(
-        f"commit {bulk_id}",
-        lambda: store.commit_batch(
-            bulk_id,
-            {"batch": bulk_id, "segments": [m.__dict__ for m in metas],
-             "replaces": []},
-        ),
-        max_retries=config.max_retries,
-        retry_backoff_ms=config.retry_backoff_ms,
-    )
+    metas = [m for m in metas if m.doc_count]
+    commit_segments(store, bulk_id, metas, config)
     metrics = BuildMetrics(
         docs_indexed=sum(m.doc_count for m in metas),
         postings_written=sum(m.n_postings for m in metas),
@@ -692,22 +573,21 @@ def build_index_bulk(
 
 
 def _build_segments_pipeline(
-    spark: SparkSession,
     docs: DataFrame,
     root: str,
     config: EngineConfig,
     content_col: str,
     job_tag: str,
     seg_names: list[str],
+    generation: int,
 ) -> tuple[list[SegmentMeta], dict]:
     """Build every segment named by ``docs.seg`` in ONE pipeline: one doc
-    shuffle, one packed-partials shuffle, two Hive-partitioned writes under
-    ``root``. Shared by the bulk initial load (all segments) and the
-    micro-batched ingest's wave commits (a few segments per wave).
-    ``seg_names``: the closed set of values ``docs.seg`` can take (callers
-    derive the column, so they know it) — drives the per-segment
-    Observation stats without a discovery job."""
-    from pyspark.sql import Observation
+    shuffle, one packed-partials shuffle, one :func:`write_segments` under
+    ``root``. Shared by the bulk initial load (all segments), the
+    micro-batched ingest's waves (a few segments per wave) and streaming
+    (one segment per micro-batch). ``seg_names``: the closed set of values
+    ``docs.seg`` can take (callers derive the column, so they know it);
+    ``generation``: SegmentStore.next_generation() of the ingest."""
     from pyspark.storagelevel import StorageLevel
 
     # The doc shuffle exists to spread tokenization/packing evenly (it
@@ -730,25 +610,60 @@ def _build_segments_pipeline(
     # shuffle + tokenize. A disk-backed cache of the analyzed frame
     # amortizes that across consumers (guide §5: reuse > recompute when
     # recompute is this wide). For the two-consumer positions-off path the
-    # r6 A/B measured the cache break-even, so it stays off there.
-    cached = None
-    want_cache = (
-        config.cache_analyzed
-        if config.cache_analyzed is not None
-        else config.index_positions
-    )
-    if want_cache:
-        cached = analyzed.persist(StorageLevel.MEMORY_AND_DISK)
-        analyzed = cached
+    # r6 A/B measured the cache break-even (the token-array cache write
+    # costs what one recompute saves), so it stays off there.
+    if config.index_positions:
+        analyzed = analyzed.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # Per-segment stats ride the two write jobs as Observation conditional
-    # aggregates over the (small, known) segment-name set — the previous
-    # read-back (two groupBy jobs over the ~500 just-written files)
-    # measured ~2.9 s per bulk build at local[32], pure overhead
-    # (guide §1.2: don't compute things twice).
-    seg_names = sorted(seg_names)
+    partial = analyzed.select("seg", "doc_id", "dl", "tokens").mapInArrow(
+        _pack_docs_direct_by_seg, schema=f"term string, seg string, "
+        "doc_ids binary, tfs binary, dls binary"
+    )
+    positions = None
+    if config.index_positions:
+        from kafka_connect_opensearch_spark.operators import positions as pos
+
+        positions = pos.build_segment_positions(analyzed, config)
+    out = write_segments(
+        root,
+        analyzed.select(*DOCS_COLUMNS, "seg"),
+        merge_partials(partial, config, config.shuffle_partitions),
+        positions,
+        seg_names,
+        job_tag=job_tag,
+        generation=generation,
+    )
+    if config.index_positions:
+        analyzed.unpersist(blocking=True)
+    return out
+
+
+def write_segments(
+    root: str,
+    docs: DataFrame,
+    postings: DataFrame,
+    positions: DataFrame | None,
+    seg_names: list[str],
+    job_tag: str,
+    generation: int,
+) -> tuple[list[SegmentMeta], dict]:
+    """THE segment writer: every build, streamed batch and merge lands
+    here. Writes the segments named by the frames' ``seg`` column under
+    ``root`` (Hive-partitioned, see segments.py), and returns one
+    :class:`SegmentMeta` per name in ``seg_names`` (a name without docs
+    gets zero stats and writes no partitions) plus the whole-write totals
+    ``{"docs", "postings"}``.
+
+    ``docs``: DOCS_COLUMNS + seg; ``postings``: POSTINGS_SCHEMA;
+    ``positions``: POSITIONS_SCHEMA or None. Per-segment stats ride the
+    two write jobs as Observation conditional aggregates over the (small,
+    known) segment-name set — the read-back they replaced (two groupBy
+    jobs over the just-written files) measured ~2.9 s per bulk build at
+    local[32]."""
+    from pyspark.sql import Observation
+
     doc_obs = Observation(f"{job_tag}_docs")
-    analyzed.select(*DOCS_COLUMNS, "seg").observe(
+    docs.observe(
         doc_obs,
         F.count(F.lit(1)).alias("n"),
         *[
@@ -761,18 +676,8 @@ def _build_segments_pipeline(
         ],
     ).write.partitionBy("seg").mode("overwrite").parquet(f"{root}/docs.parquet")
 
-    partial = analyzed.select("seg", "doc_id", "dl", "tokens").mapInArrow(
-        _pack_docs_direct_by_seg, schema=f"term string, seg string, "
-        "doc_ids binary, tfs binary, dls binary"
-    )
-    l2 = partial.repartition(
-        max(2, config.shuffle_partitions), "seg", "term"
-    ).sortWithinPartitions("seg", "term")
-    post = l2.mapInPandas(
-        _make_merge_stream(None, config.block_size), schema=POSTINGS_SCHEMA
-    )
     post_obs = Observation(f"{job_tag}_post")
-    post.observe(
+    postings.observe(
         post_obs,
         F.coalesce(F.sum("df"), F.lit(0)).alias("postings"),
         *[
@@ -787,111 +692,60 @@ def _build_segments_pipeline(
         f"{root}/postings.parquet"
     )
 
-    if config.index_positions:
-        from kafka_connect_opensearch_spark.operators import positions as pos
-
-        # "rb" (term prefix bucket) clusters files by term range so
-        # point-term reads prune to their buckets — see
-        # positions.build_segment_positions
-        pos.build_segment_positions(analyzed, config).write.partitionBy(
+    if positions is not None:
+        # ``rb`` (term's first character) clusters positions FILES by
+        # narrow term ranges, so a point-term read (cold phrase/NEAR
+        # query) prunes to the query terms' buckets by parquet min/max
+        # stats instead of decompressing the whole store (r6 A/B: 2 hot
+        # terms in ~0.1 s vs ~1.1 s). Sorting by (seg, rb, term) equals
+        # (seg, term) order — rb is a prefix of term — and pre-satisfies
+        # the writer's dynamic-partition sort, so no second sort is
+        # inserted.
+        clustered = positions.withColumn("rb", F.substring("term", 1, 1))
+        clustered.sortWithinPartitions("seg", "rb", "term").write.partitionBy(
             "seg", "rb"
         ).mode("overwrite").parquet(f"{root}/positions.parquet")
 
     dstat, pstat = doc_obs.get, post_obs.get
-    metas = []
-    for i, seg in enumerate(seg_names):
-        n = int(dstat[f"n_{i}"] or 0)
-        if n == 0:
-            continue  # segment with no docs writes no partition
-        metas.append(
-            SegmentMeta(
-                name=seg,
-                generation=0,
-                doc_count=n,
-                sum_dl=int(dstat[f"sdl_{i}"] or 0),
-                n_terms=int(pstat[f"t_{i}"] or 0),
-                n_postings=int(pstat[f"p_{i}"] or 0),
-                path=root,
-            )
+    metas = [
+        SegmentMeta(
+            name=seg,
+            generation=generation,
+            doc_count=int(dstat[f"n_{i}"] or 0),
+            sum_dl=int(dstat[f"sdl_{i}"] or 0),
+            n_terms=int(pstat[f"t_{i}"] or 0),
+            n_postings=int(pstat[f"p_{i}"] or 0),
+            path=root,
         )
-    obs = {
-        "docs": int(dstat["n"]),
-        "postings": int(pstat["postings"]),
-    }
-    if cached is not None:
-        cached.unpersist(blocking=True)
-    return metas, obs
+        for i, seg in enumerate(seg_names)
+    ]
+    totals = {"docs": int(dstat["n"]), "postings": int(pstat["postings"])}
+    return metas, totals
+
+
+def commit_segments(
+    store: SegmentStore,
+    batch_id: str,
+    metas: list[SegmentMeta],
+    config: EngineConfig,
+    replaces: list[str] | None = None,
+) -> None:
+    """Commit point (O4): the manifest rename makes ``metas`` visible (and
+    ``replaces`` dead) atomically, wrapped in the reference's retry
+    envelope (B5) for transient FS errors."""
+    call_with_retries(
+        f"commit {batch_id}",
+        lambda: store.commit_batch(
+            batch_id,
+            {"batch": batch_id, "segments": [m.__dict__ for m in metas],
+             "replaces": replaces or []},
+        ),
+        max_retries=config.max_retries,
+        retry_backoff_ms=config.retry_backoff_ms,
+    )
 
 
 def _accumulate(metrics: BuildMetrics, seg_meta: SegmentMeta) -> None:
     metrics.docs_indexed += seg_meta.doc_count
     metrics.postings_written += seg_meta.n_postings
     metrics.segments_built += 1
-
-
-def _build_one_segment(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    store: SegmentStore,
-    seg_name: str,
-    config: EngineConfig,
-    content_col: str = "content",
-) -> SegmentMeta:
-    """``batch_df`` must carry identity columns (prepare_identity); the
-    heavy analysis columns are added here, *above* an explicit repartition:
-    a small parquet source arrives as few scan partitions
-    (maxPartitionBytes), which would otherwise serialize tokenization onto
-    a handful of cores regardless of cluster size. Hash on doc_id →
-    uniform spread, no skew."""
-    from pyspark.sql import Observation
-
-    seg_path = store.segment_path(seg_name)
-    if "tokens" in batch_df.columns:
-        batch_df = batch_df.drop("tokens", "dl")
-    spread = batch_df.repartition(config.shuffle_partitions, "doc_id")
-    analyzed = add_analysis(spread, content_col)
-    # No persist: with the regexp_extract_all analyzer, recomputing
-    # tokenization for the postings pass is cheaper than materializing a
-    # cache of token arrays (measured). Segment stats ride along on the
-    # write jobs via Observation — zero extra jobs per segment.
-    doc_obs = Observation(f"{seg_name}_docs")
-    docs_out = analyzed.select(*DOCS_COLUMNS).observe(
-        doc_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
-    )
-    docs_out.write.mode("overwrite").parquet(f"{seg_path}/docs.parquet")
-
-    post = build_segment_postings_from_docs(analyzed, seg_name, config)
-    post_obs = Observation(f"{seg_name}_post")
-    post = post.observe(
-        post_obs,
-        F.count(F.lit(1)).alias("terms"),
-        F.coalesce(F.sum("df"), F.lit(0)).alias("postings"),
-    )
-    # level-2 output is already term-hash-partitioned and sorted within
-    # each partition, so files carry sorted runs (row-group min/max stats
-    # prune term lookups); a repartitionByRange here would add a sampling
-    # pass that recomputes the whole pipeline
-    post.write.mode("overwrite").parquet(f"{seg_path}/postings.parquet")
-
-    if config.index_positions:
-        from kafka_connect_opensearch_spark.operators import positions as pos
-
-        pos.build_segment_positions(
-            analyzed, config, seg_name=seg_name
-        ).write.partitionBy("rb").mode("overwrite").parquet(
-            f"{seg_path}/positions.parquet"
-        )
-
-    dstat, pstat = doc_obs.get, post_obs.get
-    meta = SegmentMeta(
-        name=seg_name,
-        generation=0,
-        doc_count=int(dstat["n"]),
-        sum_dl=int(dstat["sdl"]),
-        n_terms=int(pstat["terms"]),
-        n_postings=int(pstat["postings"]),
-    )
-    store.write_segmeta(meta)
-    return meta

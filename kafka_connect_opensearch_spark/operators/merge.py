@@ -6,17 +6,21 @@ generations (a doc re-ingested into a newer segment shadows its older
 posting entries — the index-level continuation of the connector's external
 versioning, W4) and optional tombstone deletes applied during the rewrite.
 
-Execution shape (scales like the initial build — merge cost is O(postings)
-with the same salted two-level aggregation, no driver materialization):
+Execution shape (scales like the initial build — merge cost is O(postings),
+no driver materialization). Both paths feed the build's level-2 (seg, term)
+merge and the one segment writer (indexer.write_segments), under a fresh
+root named for the merged segment:
 
-  postings(seg k..n) → mapInPandas decode-explode → (term, doc_id, tf, dl)
-    → anti-join losers (docs shadowed by newer segments) and deletes
-    → groupBy(term, salt) / groupBy(term) re-pack → new segment
-    → manifest entry with ``replaces=[old segments]`` (atomic commit)
+- disjoint segments, no deletes: the stored packed rows ARE level-1
+  partials — regrouped as they are;
+- otherwise: postings(seg k..n) → mapInPandas decode-explode →
+  (term, doc_id, tf, dl) → keep only latest-wins survivors (minus
+  deletes) → level-1 re-pack per partition.
 
-Old segment directories are left in place (immutable); the manifest marks
-them dead, so a crashed merge is invisible and a re-run is idempotent —
-exactly the reference's retry-safe bulk semantics (B5).
+The commit is a manifest entry with ``replaces=[old segments]``. Old
+segments are left in place (immutable); the manifest marks them dead, so a
+crashed merge is invisible and a re-run is idempotent — exactly the
+reference's retry-safe bulk semantics (B5).
 """
 
 from __future__ import annotations
@@ -30,16 +34,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_opensearch_spark.config import EngineConfig
+from kafka_connect_opensearch_spark.operators import positions as pos
 from kafka_connect_opensearch_spark.operators import postings as codec
 from kafka_connect_opensearch_spark.operators.indexer import (
-    build_segment_postings,
+    PARTIAL_COLS,
+    PARTIAL_SCHEMA,
+    _pack_partial_stream,
+    commit_segments,
+    merge_partials,
+    write_segments,
 )
 from kafka_connect_opensearch_spark.operators.segments import (
+    DOCS_COLUMNS,
     BuildMetrics,
     SegmentMeta,
     SegmentStore,
 )
-from kafka_connect_opensearch_spark.retry import call_with_retries
 
 DECODED_SCHEMA = "term string, _segname string, doc_id long, tf long, dl long"
 
@@ -162,37 +172,88 @@ def merge_segments(
     # merges land within one second (back-to-back ingest() calls with
     # deletes), silently overwriting a segment directory
     seg_name = f"seg_g{new_gen}_m{int(time.time())}_{uuid.uuid4().hex[:8]}"
+    positions = None
+    if store.meta().get("positions"):
+        positions = pos.decode_positions_df(store.read_positions(spark, metas))
 
     # Disjoint-segment fast path (the common tiered-merge shape: a
     # hash-partitioned build never re-ingests a doc into two segments).
     # When no doc_id appears twice and there are no deletes, latest-wins
-    # is the identity — so the decode-explode of every posting entry, the
-    # winners aggregation and the survivor join are pure overhead
-    # (guide §2.3: shuffle the packed bytes, not the exploded rows). The
-    # probe is one ids-only columnar count compared against the manifest
-    # doc counts.
-    if delete_doc_keys is None:
-        total_docs = sum(m.doc_count for m in metas)
-        distinct_docs = (
-            store.read_docs(spark, metas).select("doc_id").distinct().count()
+    # is the identity — every doc and posting survives verbatim, and the
+    # stored packed rows are valid level-1 partials (term, delta-varint
+    # doc_ids/tfs/dls). The decode-explode of every posting entry, the
+    # winners aggregation and the survivor join are pure overhead (guide
+    # §2.3: shuffle the packed bytes, not the exploded rows). The probe
+    # is one ids-only columnar count compared against the manifest doc
+    # counts.
+    disjoint = delete_doc_keys is None and (
+        store.read_docs(spark, metas).select("doc_id").distinct().count()
+        == sum(m.doc_count for m in metas)
+    )
+    if disjoint:
+        docs = store.read_docs(spark, metas)
+        partial = store.read_postings(spark, metas).select(*PARTIAL_COLS)
+    else:
+        docs = _winners(store, spark, metas, delete_doc_keys)
+        keep = docs.select("doc_id", "_segname")
+        # keep only posting entries of surviving (doc_id, winning segment)
+        # pairs, re-packed per partition into level-1 partials
+        survivors = decode_postings_df(
+            store.read_postings(spark, metas)
+        ).join(keep, ["doc_id", "_segname"], "inner")
+        partial = survivors.select(
+            "term", "doc_id", "tf", "dl"
+        ).sortWithinPartitions("term").mapInPandas(
+            _pack_partial_stream, schema=PARTIAL_SCHEMA
         )
-        if distinct_docs == total_docs:
-            return _merge_disjoint(
-                spark, store, metas, names, seg_name, new_gen, config, t0
-            )
+        if positions is not None:
+            positions = positions.join(keep, ["doc_id", "_segname"], "inner")
+    if positions is not None:
+        # positions live in the same segments merges rewrite (Lucene
+        # contract): per-doc blobs of the same survivors concatenate
+        # byte-for-byte — no position value is re-encoded
+        positions = pos.repack_positions(
+            positions.select("term", "doc_id", "n_pos", "pos_blob"), config
+        ).withColumn("seg", F.lit(seg_name))
 
-    docs_parts = []
-    for m in metas:
-        docs_parts.append(
-            store.read_docs(spark, [m], with_seg=True)
-            .withColumnRenamed("seg", "_segname")
-            .withColumn("_gen", F.lit(m.generation))
-        )
-    all_docs = docs_parts[0]
-    for d in docs_parts[1:]:
-        all_docs = all_docs.unionByName(d)
+    (meta,), _ = write_segments(
+        store.bulk_path(seg_name),
+        docs.select(*DOCS_COLUMNS).withColumn("seg", F.lit(seg_name)),
+        merge_partials(
+            partial.withColumn("seg", F.lit(seg_name)), config,
+            config.shuffle_partitions // 4,
+        ),
+        positions,
+        [seg_name],
+        job_tag=seg_name,
+        generation=new_gen,
+    )
+    commit_segments(store, f"merge_{seg_name}", [meta], config, replaces=names)
+    out = BuildMetrics(
+        docs_indexed=meta.doc_count,
+        postings_written=meta.n_postings,
+        segments_built=1,
+        segments_merged=len(names),
+    )
+    out.wall_secs = time.monotonic() - t0
+    return out
 
-    # latest-wins across generations (ties: lexicographically later segment)
+
+def _winners(
+    store: SegmentStore,
+    spark: SparkSession,
+    metas: list[SegmentMeta],
+    delete_doc_keys: DataFrame | None,
+) -> DataFrame:
+    """Latest-wins docs across ``metas`` (ties: lexicographically later
+    segment) minus ``delete_doc_keys``; ``_segname`` names each winner's
+    segment."""
+    gen_of = F.create_map(
+        *[F.lit(x) for m in metas for x in (m.name, m.generation)]
+    )
+    all_docs = store.read_docs(spark, metas, with_seg=True).withColumnRenamed(
+        "seg", "_segname"
+    ).withColumn("_gen", gen_of[F.col("_segname")])
     winners = (
         all_docs.groupBy("doc_id")
         .agg(
@@ -215,189 +276,7 @@ def merge_segments(
             "doc_key",
             "left_anti",
         )
-
-    packed = store.read_postings(spark, metas)
-    decoded = decode_postings_df(packed)
-    # keep only posting entries of surviving (doc_id, winning segment) pairs
-    survivors = decoded.join(
-        winners.select("doc_id", "_segname"), ["doc_id", "_segname"], "inner"
-    ).select("term", "doc_id", "tf", "dl")
-
-    from pyspark.sql import Observation
-
-    seg_path = store.segment_path(seg_name)
-    doc_obs = Observation(f"{seg_name}_docs")
-    winners.select("doc_id", "doc_key", "content_sha256", "dl").observe(
-        doc_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).write.mode("overwrite").parquet(f"{seg_path}/docs.parquet")
-    post = build_segment_postings(survivors, seg_name, config)
-    post_obs = Observation(f"{seg_name}_post")
-    post = post.observe(
-        post_obs,
-        F.count(F.lit(1)).alias("t"),
-        F.coalesce(F.sum("df"), F.lit(0)).alias("p"),
-    )
-    # already term-partitioned + sorted (see indexer._build_one_segment)
-    post.write.mode("overwrite").parquet(f"{seg_path}/postings.parquet")
-
-    if store.meta().get("positions"):
-        # positions live in the same segments merges rewrite (Lucene
-        # contract): decode to per-doc blobs, keep the same survivors
-        # (latest-wins + deletes), re-pack for the merged segment. Blobs
-        # concatenate byte-for-byte — no position value is re-encoded.
-        from kafka_connect_opensearch_spark.operators import positions as pos
-
-        decoded_pos = pos.decode_positions_df(store.read_positions(spark, metas))
-        pos_survivors = decoded_pos.join(
-            winners.select("doc_id", "_segname"), ["doc_id", "_segname"],
-            "inner",
-        ).select("term", "doc_id", "n_pos", "pos_blob")
-        pos.repack_positions(pos_survivors, config).withColumn(
-            "seg", F.lit(seg_name)
-        ).select(
-            "term", "seg", "part", "n_docs",
-            "doc_ids", "pos_counts", "positions",
-        ).withColumn(
-            "rb", F.substring("term", 1, 1)
-        ).write.partitionBy("rb").mode("overwrite").parquet(
-            f"{seg_path}/positions.parquet"
-        )
-
-    # stats ride the write jobs (Observation) — the prior read-back of the
-    # just-written files was two extra jobs per merge
-    drow, prow = doc_obs.get, post_obs.get
-    meta = SegmentMeta(
-        name=seg_name,
-        generation=new_gen,
-        doc_count=int(drow["n"]),
-        sum_dl=int(drow["s"]),
-        n_terms=int(prow["t"]),
-        n_postings=int(prow["p"]),
-    )
-    store.write_segmeta(meta)
-    call_with_retries(
-        f"commit merge {seg_name}",
-        lambda: store.commit_batch(
-            f"merge_{seg_name}",
-            {"batch": f"merge_{seg_name}", "segments": [meta.__dict__],
-             "replaces": names},
-        ),
-        max_retries=config.max_retries,
-        retry_backoff_ms=config.retry_backoff_ms,
-    )
-    out = BuildMetrics(
-        docs_indexed=meta.doc_count,
-        postings_written=meta.n_postings,
-        segments_built=1,
-        segments_merged=len(names),
-    )
-    out.wall_secs = time.monotonic() - t0
-    return out
-
-
-def _merge_disjoint(
-    spark: SparkSession,
-    store: SegmentStore,
-    metas: list[SegmentMeta],
-    names: list[str],
-    seg_name: str,
-    new_gen: int,
-    config: EngineConfig,
-    t0: float,
-) -> BuildMetrics:
-    """Merge segments with pairwise-disjoint doc ids (no deletes): every
-    doc and posting survives verbatim, so the rewrite reduces to
-
-    - docs: verbatim union write (no winners aggregation, no join);
-    - postings: the stored packed rows ARE valid level-1 partials
-      (term, delta-varint doc_ids/tfs/dls) — regroup them by term and run
-      the standard level-2 sorted-run merge. The shuffle carries one
-      packed row per (term, source segment) instead of one exploded row
-      per posting (~20x fewer bytes; the r6 A/B measured auto_merge
-      12.9 s -> see BENCH/ROUND6.md);
-    - positions: per-doc blobs concat byte-for-byte (same as the slow
-      path, minus the survivor join).
-
-    Doc stats come from manifest arithmetic (exact under disjointness);
-    term stats ride the postings write as an Observation.
-    """
-    from pyspark.sql import Observation
-
-    from kafka_connect_opensearch_spark.operators.indexer import (
-        _make_merge_stream,
-    )
-    from kafka_connect_opensearch_spark.operators.segments import (
-        POSTINGS_SCHEMA,
-    )
-
-    seg_path = store.segment_path(seg_name)
-    store.read_docs(spark, metas).select(
-        "doc_id", "doc_key", "content_sha256", "dl"
-    ).write.mode("overwrite").parquet(f"{seg_path}/docs.parquet")
-
-    partial = store.read_postings(spark, metas).select(
-        "term", "doc_ids", "tfs", "dls"
-    )
-    l2 = partial.repartition(
-        max(2, config.shuffle_partitions // 4), "term"
-    ).sortWithinPartitions("term")
-    post = l2.mapInPandas(
-        _make_merge_stream(seg_name, config.block_size), schema=POSTINGS_SCHEMA
-    )
-    post_obs = Observation(f"{seg_name}_post")
-    post.observe(
-        post_obs,
-        F.count(F.lit(1)).alias("t"),
-        F.coalesce(F.sum("df"), F.lit(0)).alias("p"),
-    ).write.mode("overwrite").parquet(f"{seg_path}/postings.parquet")
-
-    if store.meta().get("positions"):
-        from kafka_connect_opensearch_spark.operators import positions as pos
-
-        decoded_pos = pos.decode_positions_df(
-            store.read_positions(spark, metas)
-        ).select("term", "doc_id", "n_pos", "pos_blob")
-        pos.repack_positions(decoded_pos, config).withColumn(
-            "seg", F.lit(seg_name)
-        ).select(
-            "term", "seg", "part", "n_docs",
-            "doc_ids", "pos_counts", "positions",
-        ).withColumn(
-            "rb", F.substring("term", 1, 1)
-        ).write.partitionBy("rb").mode("overwrite").parquet(
-            f"{seg_path}/positions.parquet"
-        )
-
-    prow = post_obs.get
-    meta = SegmentMeta(
-        name=seg_name,
-        generation=new_gen,
-        doc_count=sum(m.doc_count for m in metas),
-        sum_dl=sum(m.sum_dl for m in metas),
-        n_terms=int(prow["t"]),
-        n_postings=int(prow["p"]),
-    )
-    store.write_segmeta(meta)
-    call_with_retries(
-        f"commit merge {seg_name}",
-        lambda: store.commit_batch(
-            f"merge_{seg_name}",
-            {"batch": f"merge_{seg_name}", "segments": [meta.__dict__],
-             "replaces": names},
-        ),
-        max_retries=config.max_retries,
-        retry_backoff_ms=config.retry_backoff_ms,
-    )
-    out = BuildMetrics(
-        docs_indexed=meta.doc_count,
-        postings_written=meta.n_postings,
-        segments_built=1,
-        segments_merged=len(names),
-    )
-    out.wall_secs = time.monotonic() - t0
-    return out
+    return winners
 
 
 def reconcile_updates(

@@ -4,13 +4,12 @@ source-table rescan).
 
 Lucene keeps positions inside the same segments merges rewrite
 (``IndexOptions.DOCS_AND_FREQS_AND_POSITIONS``); here each segment gets a
-``positions.parquet`` beside its ``postings.parquet`` — built by the same
-build pipelines (classic per-segment and bulk/wave), committed by the
-same manifests, and rewritten by the same log-structured merges
-(latest-wins across generations + tombstone deletes) — so positional
-queries can never go stale against the frequency index. Enabled per
-index via ``EngineConfig.index_positions`` (the per-field positions
-flag of a Lucene mapping, re-cast per index).
+``positions.parquet`` beside its ``postings.parquet`` — written by the
+same segment writer, committed by the same manifests, and rewritten by
+the same log-structured merges (latest-wins across generations +
+tombstone deletes) — so positional queries can never go stale against
+the frequency index. Enabled per index via ``EngineConfig.index_positions``
+(the per-field positions flag of a Lucene mapping, re-cast per index).
 
 Storage rows, term-sorted within files so ``term IN (...)`` prunes row
 groups::
@@ -49,12 +48,9 @@ from pyspark.sql import functions as F
 from kafka_connect_opensearch_spark.config import EngineConfig
 from kafka_connect_opensearch_spark.functions.analysis import tokenize_py
 from kafka_connect_opensearch_spark.operators import postings as codec
-from kafka_connect_opensearch_spark.operators.segments import SegmentStore
-
-POSITIONS_SCHEMA = (
-    "term string, seg string, part long, n_docs long, doc_ids binary, "
-    "pos_counts binary, positions binary, blk_max_doc binary, "
-    "blk_lens binary"
+from kafka_connect_opensearch_spark.operators.segments import (
+    POSITIONS_SCHEMA,
+    SegmentStore,
 )
 
 # Positional skip data (VERDICT r4 #2 — Lucene stores skip data IN the
@@ -147,7 +143,7 @@ DECODED_POSITIONS_SCHEMA = (
 
 
 # --------------------------------------------------------------------------
-# build: Arrow pack (shared by classic per-segment and bulk/wave pipelines)
+# build: Arrow pack (the build pipeline's positions frame)
 # --------------------------------------------------------------------------
 
 
@@ -268,36 +264,23 @@ def _pack_positions_by_seg(
 
 
 def build_segment_positions(
-    analyzed: DataFrame, config: EngineConfig, seg_name: str | None = None
+    analyzed: DataFrame, config: EngineConfig
 ) -> DataFrame:
-    """(doc_id, tokens[, seg]) → packed positions rows (POSITIONS_SCHEMA),
-    repartitioned by (seg, term) and term-sorted so parquet row-group
-    min/max stats prune query-term lookups.
+    """(seg, doc_id, tokens) → packed positions rows (POSITIONS_SCHEMA),
+    repartitioned by (seg, term prefix) — the writer's ``rb`` file
+    clustering (see indexer.write_segments).
 
     ``analyzed`` must already be doc-hash partitioned (the same spread the
     postings build uses): that partitioning IS the ``part`` doc-disjointness
-    invariant. ``seg_name`` stamps a constant segment (classic per-segment
-    build); None expects a ``seg`` column (bulk/wave pipeline)."""
-    src = analyzed
-    if seg_name is not None:
-        src = src.withColumn("seg", F.lit(seg_name))
-    src = src.withColumn("part", F.spark_partition_id().cast("long"))
+    invariant."""
+    src = analyzed.withColumn("part", F.spark_partition_id().cast("long"))
     packed = src.select("seg", "part", "doc_id", "tokens").mapInArrow(
         _pack_positions_by_seg, schema=POSITIONS_SCHEMA
     )
-    # ``rb`` (term's first character) is the file-clustering key: callers
-    # write ``partitionBy(..., "rb")``, so every positions FILE covers one
-    # narrow term range and a point-term read (cold phrase/NEAR query)
-    # prunes to the query terms' buckets by parquet min/max stats instead
-    # of decompressing the whole store (~87 MB at bench scale; r6 A/B on
-    # a range-clustered layout read 2 hot terms in ~0.1 s vs ~1.1 s).
-    # Sorting by (seg, rb, term) equals (seg, term) order — rb is a
-    # prefix of term — and pre-satisfies the writer's dynamic-partition
-    # sort so no second (unstable) sort is inserted.
-    packed = packed.withColumn("rb", F.substring("term", 1, 1))
     return packed.repartition(
-        max(2, config.shuffle_partitions // 2), "seg", "rb"
-    ).sortWithinPartitions("seg", "rb", "term")
+        max(2, config.shuffle_partitions // 2),
+        "seg", F.substring("term", 1, 1),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -953,11 +936,9 @@ class PositionsReader:
     reads exactly the active segments, so merges/deletes are visible the
     moment their manifest commits)."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 use_dsv2: bool = False):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.store = SegmentStore(index_dir)
-        self._use_dsv2 = use_dsv2
         meta = self.store.meta()
         if not meta.get("positions"):
             raise ValueError(
@@ -976,9 +957,7 @@ class PositionsReader:
         self._term_cache: dict[str, tuple] = {}
         self._cache_values = 0
         self._group_ids: dict[tuple[str, int], int] = {}
-        self._scan_files: dict[str, list] = {}  # DSv2 pinned file lists
         self._df_cache: dict[str, DataFrame] = {}  # resolved-scan reuse
-        self._dsv2_ok: bool | None = None
         # canonical keying (see _CANON_M block): doc enumeration + per-
         # term prebuilt key arrays, all snapshot-scoped
         self._doc_ranks: np.ndarray | bool | None = None
@@ -993,41 +972,30 @@ class PositionsReader:
         self._term_cache.clear()
         self._cache_values = 0
         self._group_ids.clear()
-        self._scan_files = {}
         self._df_cache = {}
         self._doc_ranks = None
         self._canon_cache.clear()
         self._entries_cache = {}
 
-    def _positions_datasets(self):
-        """Cached pyarrow dataset handles (coordinator path) — mirrors
-        bm25.IndexReader._postings_datasets: discovery costs hundreds of
-        ms on many-file stores and must not be paid per query."""
-        if self._datasets is None:
-            import pyarrow.dataset as pads
+    def _positions_tables(self, columns, flt):
+        """Coordinator fetch: one pyarrow table per root with the active
+        segments' positions rows matching ``flt``. Dataset handles are
+        cached — mirrors bm25.IndexReader._postings_datasets: discovery
+        costs hundreds of ms on many-file stores and must not be paid
+        per query."""
+        import pyarrow.dataset as pads
 
-            scans = []
-            bulk: dict[str, list[str]] = {}
-            for s in self._segments:
-                if s.path:
-                    bulk.setdefault(s.path, []).append(s.name)
-                else:
-                    scans.append(
-                        (
-                            f"{self.store.segment_path(s.name)}"
-                            "/positions.parquet",
-                            None,
-                        )
-                    )
-            scans += [
-                (f"{root}/positions.parquet", names)
-                for root, names in bulk.items()
-            ]
+        if self._datasets is None:
             self._datasets = [
-                (pads.dataset(p, format="parquet", partitioning="hive"), names)
-                for p, names in scans
+                (
+                    pads.dataset(f"{root}/positions.parquet",
+                                 format="parquet", partitioning="hive"),
+                    pads.field("seg").isin(names),
+                )
+                for root, names in self.store.roots(self._segments).items()
             ]
-        return self._datasets
+        for dset, seg_flt in self._datasets:
+            yield dset.to_table(columns=columns, filter=flt & seg_flt)
 
     def term_entries(self, terms: list[str]) -> dict[str, int]:
         """Summed ``n_docs`` per term across active segments — the
@@ -1041,11 +1009,9 @@ class PositionsReader:
         missing = [t for t in terms if t not in self._entries_cache]
         if missing:
             out: dict[str, int] = dict.fromkeys(missing, 0)
-            for dset, names in self._positions_datasets():
-                flt = pads.field("term").isin(missing)
-                if names is not None:
-                    flt = flt & pads.field("seg").isin(names)
-                tbl = dset.to_table(columns=["term", "n_docs"], filter=flt)
+            for tbl in self._positions_tables(
+                ["term", "n_docs"], pads.field("term").isin(missing)
+            ):
                 for t, n in zip(
                     tbl["term"].to_pylist(), tbl["n_docs"].to_pylist(),
                     strict=True,
@@ -1067,19 +1033,12 @@ class PositionsReader:
             "doc_ids", "pos_counts", "positions",
         ]
         parts = []
-        for dset, names in self._positions_datasets():
-            flt = pads.field("term").isin(terms)
-            if names is not None:
-                flt = flt & pads.field("seg").isin(names)
-            # blk_* skip columns ride along when the store has them; the
-            # hive "rb" clustering column is excluded (metadata, and its
-            # narrow per-file term ranges are what make this isin prune
-            # to the query terms' files)
-            want = [
-                c for c in dset.schema.names
-                if c in cols or c.startswith("blk_")
-            ]
-            tbl = dset.to_table(columns=want, filter=flt)
+        # the hive "rb" clustering column is excluded (metadata, and its
+        # narrow per-file term ranges are what make this isin prune to the
+        # query terms' files)
+        for tbl in self._positions_tables(
+            [*cols, "blk_max_doc", "blk_lens"], pads.field("term").isin(terms)
+        ):
             if tbl.num_rows:
                 parts.append(tbl.to_pandas())
         if not parts:
@@ -1128,13 +1087,13 @@ class PositionsReader:
 
             parts_list = []
             for m in self._segments:
-                root = (
-                    f"{m.path}/docs.parquet/seg={m.name}"
-                    if m.path
-                    else f"{self.store.segment_path(m.name)}/docs.parquet"
-                )
+                if not m.doc_count:
+                    continue
                 try:
-                    dset = pads.dataset(root, format="parquet")
+                    dset = pads.dataset(
+                        f"{m.path}/docs.parquet/seg={m.name}",
+                        format="parquet",
+                    )
                 except FileNotFoundError:
                     self._doc_ranks = False
                     return False
@@ -1318,25 +1277,7 @@ class PositionsReader:
         """Distributed read of the query terms' rows. Default: cached
         resolved parquet scan (listed/resolved once per manifest
         snapshot) with the term filter pushed to the scan — row groups
-        pruned by the sorted layout. With ``use_dsv2=True``: the DSv2
-        segment relation (ONE BatchScan, filter absorbed as
-        PushedFilters; sources/segment_scan.py) — plan-pinned but
-        measured slower (BENCH/DSV2.md), so opt-in."""
-        from kafka_connect_opensearch_spark.sources import segment_scan
-
-        if self._use_dsv2 and self._dsv2_ok is not False:
-            if "positions" not in self._scan_files:
-                self._scan_files["positions"] = segment_scan.segment_files(
-                    self.store, self._segments, "positions"
-                )
-            try:
-                df = segment_scan.scan_df(
-                    self.spark, "positions", self._scan_files["positions"]
-                )
-                self._dsv2_ok = True
-                return df.filter(F.col("term").isin(list(terms)))
-            except Exception:
-                self._dsv2_ok = False
+        pruned by the sorted layout."""
         if "positions" not in self._df_cache:
             self._df_cache["positions"] = self.store.read_positions(
                 self.spark, self._segments
@@ -1454,11 +1395,10 @@ class PositionsReader:
 
         upper = prefix[:-1] + chr(ord(prefix[-1]) + 1)
         terms: set[str] = set()
-        for dset, names in self._positions_datasets():
-            flt = (pads.field("term") >= prefix) & (pads.field("term") < upper)
-            if names is not None:
-                flt = flt & pads.field("seg").isin(names)
-            tbl = dset.to_table(columns=["term"], filter=flt)
+        for tbl in self._positions_tables(
+            ["term"],
+            (pads.field("term") >= prefix) & (pads.field("term") < upper),
+        ):
             terms.update(tbl["term"].to_pylist())
         return sorted(terms)[:max_terms]
 
@@ -1797,13 +1737,9 @@ class PositionsReader:
         id_parts: list[np.ndarray] = []
         dl_parts: list[np.ndarray] = []
         gen_parts: list[np.ndarray] = []
-        for dset, names in reader._postings_datasets():  # noqa: SLF001
-            flt = pads.field("term") == term
-            if names is not None:
-                flt = flt & pads.field("seg").isin(names)
-            tbl = dset.to_table(
-                columns=["seg", "doc_ids", "dls"], filter=flt
-            )
+        for tbl in reader._postings_tables(  # noqa: SLF001
+            ["seg", "doc_ids", "dls"], pads.field("term") == term
+        ):
             segs = tbl["seg"].to_pylist()
             for row in range(tbl.num_rows):
                 ids_row = np.cumsum(

@@ -3,21 +3,28 @@
 The reference's durability contract — contiguous-prefix offset commit
 (OffsetTracker.java:120-156) and bulk-flush batching (OpenSearchClient.java:
 145-155) — is re-cast as: each input micro-batch becomes one immutable
-segment directory; the batch is *committed* by atomically renaming its
-manifest JSON into ``manifest/``. Resume = skip batches whose manifest file
-exists (SURVEY.md O1-O5). Lucene-style log-structured merge
-(SURVEY.md D3) compacts many small segments into one, preserving
-latest-wins document identity (W1/W4).
+segment; the batch is *committed* by atomically renaming its manifest JSON
+into ``manifest/``. Resume = skip batches whose manifest file exists
+(SURVEY.md O1-O5). Lucene-style log-structured merge (SURVEY.md D3)
+compacts many small segments into one, preserving latest-wins document
+identity (W1/W4).
 
-Layout::
+Every write — a build wave, a bulk load, a streamed micro-batch, a merge —
+goes to a fresh *root* and lays its segments out as Hive partitions, so
+one reader serves every segment. Layout::
 
     index_dir/
-      meta.json                     # analyzer + BM25 config, created once (S4/S5)
-      segments/<seg_name>/
-        docs.parquet/               # doc_id, doc_key, content_sha256, dl, ...
-        postings.parquet/           # term, df, max_tf, doc_ids, tfs, dls, block_max
-        segmeta.json                # doc_count, sum_dl, n_terms, n_postings, generation
-      manifest/<batch_id>.json      # commit point (written last, atomic rename)
+      meta.json                        # analyzer + BM25 config, created once (S4/S5)
+      bulk_<tag>/                      # one root per write
+        docs.parquet/seg=<name>/       # doc_id, doc_key, content_sha256, dl
+        postings.parquet/seg=<name>/   # term, df, max_tf, doc_ids, tfs, dls, block_max
+        positions.parquet/seg=<name>/rb=<c>/   # index_positions only
+      manifest/<batch_id>.json         # commit point (written last, atomic rename)
+
+A manifest entry lists its segments' stats (doc_count, sum_dl, n_terms,
+n_postings, generation) and root (``path``); roots are never rewritten
+once a segment in them is committed. A segment without docs writes no
+partitions.
 """
 
 from __future__ import annotations
@@ -25,14 +32,23 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import dataclass, field
 
 POSTINGS_SCHEMA = (
     "term string, seg string, df long, max_tf long, "
     "doc_ids binary, tfs binary, dls binary, block_max binary"
 )
 
+POSITIONS_SCHEMA = (
+    "term string, seg string, part long, n_docs long, doc_ids binary, "
+    "pos_counts binary, positions binary, blk_max_doc binary, "
+    "blk_lens binary"
+)
+
 DOCS_COLUMNS = ["doc_id", "doc_key", "content_sha256", "dl"]
+DOCS_SCHEMA = (
+    "doc_id long, doc_key string, content_sha256 string, dl int, seg string"
+)
 
 
 @dataclass
@@ -43,9 +59,8 @@ class SegmentMeta:
     sum_dl: int
     n_terms: int
     n_postings: int
-    # "" → classic layout (segments/<name>/{docs,postings}.parquet);
-    # otherwise the root of a Hive-partitioned bulk build whose
-    # {docs,postings}.parquet dirs contain seg=<name> partitions.
+    # root of the write holding this segment's seg=<name> partitions;
+    # relative paths resolve against the index dir (snapshots)
     path: str = ""
 
 
@@ -67,13 +82,11 @@ class SegmentStore:
 
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
-        self.segments_dir = os.path.join(index_dir, "segments")
         self.manifest_dir = os.path.join(index_dir, "manifest")
 
     # -- DDL (idempotent create-if-absent, reference S4: OpenSearchClient.java:441-481)
     def create_if_absent(self, meta: dict) -> bool:
         created = not os.path.exists(os.path.join(self.index_dir, "meta.json"))
-        os.makedirs(self.segments_dir, exist_ok=True)
         os.makedirs(self.manifest_dir, exist_ok=True)
         if created:
             self._atomic_write_json(os.path.join(self.index_dir, "meta.json"), meta)
@@ -111,129 +124,89 @@ class SegmentStore:
         os.rename(tmp, path)
 
     # -- segments
-    def active_segments(self) -> list[SegmentMeta]:
-        """Segments referenced by committed manifests, minus merged-away ones.
+    def active_segments(self, batches: dict | None = None) -> list[SegmentMeta]:
+        """Segments referenced by committed manifests (default: the ones on
+        disk now; ``batches``: a pinned :meth:`committed_batches` result),
+        minus merged-away ones.
 
-        A relative bulk ``path`` resolves against THIS store's index dir:
+        A relative ``path`` resolves against THIS store's index dir:
         snapshots write their pinned manifests with snapshot-relative
         paths, so a snapshot (and anything restored from it) reads its
         own copied files — never the source index's — and survives the
         source being moved or deleted."""
+        batches = self.committed_batches() if batches is None else batches
         live: dict[str, SegmentMeta] = {}
         dead: set[str] = set()
-        for entry in self.committed_batches().values():
+        for entry in batches.values():
             for seg in entry.get("segments", []):
                 m = SegmentMeta(**seg)
-                if m.path and not os.path.isabs(m.path):
+                if not m.path:
+                    raise ValueError(
+                        f"segment {m.name!r} of {self.index_dir} uses the "
+                        "retired per-segment layout (segments/<name>/); "
+                        "rebuild the index from its source"
+                    )
+                if not os.path.isabs(m.path):
                     m.path = os.path.join(self.index_dir, m.path)
-                live[seg["name"]] = m
+                live[m.name] = m
             dead.update(entry.get("replaces", []))
         return [m for n, m in sorted(live.items()) if n not in dead]
 
-    def segment_path(self, name: str) -> str:
-        return os.path.join(self.segments_dir, name)
+    def next_generation(self) -> int:
+        """Generation of a freshly ingested segment: above every active
+        segment's (merged ones included), so its docs win latest-wins
+        against any copy already committed."""
+        return 1 + max((m.generation for m in self.active_segments()),
+                       default=-1)
 
     def bulk_path(self, tag: str) -> str:
         return os.path.join(self.index_dir, f"bulk_{tag}")
 
-    def write_segmeta(self, meta: SegmentMeta) -> None:
-        self._atomic_write_json(
-            os.path.join(self.segment_path(meta.name), "segmeta.json"), asdict(meta)
-        )
+    @staticmethod
+    def roots(metas: list[SegmentMeta]) -> dict[str, list[str]]:
+        """root → names of its segments that hold docs (a segment without
+        docs has no partitions to read)."""
+        out: dict[str, list[str]] = {}
+        for m in metas:
+            if m.doc_count:
+                out.setdefault(m.path, []).append(m.name)
+        return out
 
-    # -- unified readers over classic + bulk segment layouts
-    def read_postings(self, spark, metas: list[SegmentMeta] | None = None):
-        """Union postings of the given (default: active) segments. Classic
-        segments store ``seg`` in-file; bulk segments get it from Hive
-        partition discovery — one read per bulk root, pruned by seg."""
+    def _read(self, spark, kind: str, metas, schema: str):
+        """Union one ``kind`` store of the given (default: active)
+        segments: one read per root, pruned to its segments by the
+        ``seg`` partition column. The store's schema is passed, not
+        inferred: inference costs a footer-reading Spark job per root
+        (~90 ms each on local[4]), paid by every merge and reconcile."""
         from pyspark.sql import functions as F
 
         metas = self.active_segments() if metas is None else metas
-        dfs = []
-        classic = [m for m in metas if not m.path]
-        if classic:
-            dfs.append(
-                spark.read.parquet(
-                    *[f"{self.segment_path(m.name)}/postings.parquet"
-                      for m in classic]
-                )
-            )
-        roots: dict[str, list[str]] = {}
-        for m in metas:
-            if m.path:
-                roots.setdefault(m.path, []).append(m.name)
-        for root, names in roots.items():
-            dfs.append(
-                spark.read.parquet(f"{root}/postings.parquet").filter(
-                    F.col("seg").isin(names)
-                )
-            )
+        dfs = [
+            spark.read.schema(schema).parquet(f"{root}/{kind}.parquet")
+            .filter(F.col("seg").isin(names))
+            for root, names in self.roots(metas).items()
+        ]
+        if not dfs:
+            return spark.createDataFrame([], schema)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
         return out
 
-    def read_positions(self, spark, metas: list[SegmentMeta] | None = None):
-        """Union positions of the given (default: active) segments — same
-        two-layout shape as :meth:`read_postings` (classic stores ``seg``
-        in-file; bulk roots get it from Hive partition discovery)."""
-        from pyspark.sql import functions as F
+    def read_postings(self, spark, metas: list[SegmentMeta] | None = None):
+        return self._read(spark, "postings", metas, POSTINGS_SCHEMA)
 
-        metas = self.active_segments() if metas is None else metas
-        dfs = []
-        # one read per classic root: each root is its own hive table now
-        # (rb=<prefix> partition dirs) and multi-root partition discovery
-        # rejects them as conflicting structures
-        for m in metas:
-            if not m.path:
-                dfs.append(
-                    spark.read.parquet(
-                        f"{self.segment_path(m.name)}/positions.parquet"
-                    )
-                )
-        roots: dict[str, list[str]] = {}
-        for m in metas:
-            if m.path:
-                roots.setdefault(m.path, []).append(m.name)
-        for root, names in roots.items():
-            dfs.append(
-                spark.read.parquet(f"{root}/positions.parquet").filter(
-                    F.col("seg").isin(names)
-                )
-            )
-        # "rb" is a file-clustering partition column (term prefix), not
-        # data; dropping it (lenient no-op where absent) keeps pre-r6 and
-        # r6 layouts union-compatible
-        out = dfs[0].drop("rb")
-        for d in dfs[1:]:
-            out = out.unionByName(d.drop("rb"))
-        return out
+    def read_positions(self, spark, metas: list[SegmentMeta] | None = None):
+        # "rb" is a file-clustering partition column (term prefix), not data
+        return self._read(
+            spark, "positions", metas, f"{POSITIONS_SCHEMA}, rb string"
+        ).drop("rb")
 
     def read_docs(self, spark, metas: list[SegmentMeta] | None = None,
                   with_seg: bool = False):
-        """Union docs tables; optionally tagging each row's segment name
-        (classic docs files don't store it — it is stamped per segment)."""
-        from pyspark.sql import functions as F
-
-        metas = self.active_segments() if metas is None else metas
-        dfs = []
-        for m in metas:
-            if m.path:
-                d = spark.read.parquet(f"{m.path}/docs.parquet").filter(
-                    F.col("seg") == m.name
-                )
-                d = d if with_seg else d.drop("seg")
-            else:
-                d = spark.read.parquet(
-                    f"{self.segment_path(m.name)}/docs.parquet"
-                )
-                if with_seg:
-                    d = d.withColumn("seg", F.lit(m.name))
-            dfs.append(d)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        """Union docs tables; ``with_seg`` keeps each row's segment name."""
+        d = self._read(spark, "docs", metas, DOCS_SCHEMA)
+        return d if with_seg else d.drop("seg")
 
     def global_stats(self) -> tuple[int, float]:
         """(N docs, avgdl) across active segments — driver-side, O(#segments)."""

@@ -83,8 +83,7 @@ def snapshot_index(index_dir: str, snapshot_dir: str) -> dict:
     written last. A concurrent writer committing mid-copy cannot tear
     the snapshot — its manifest is not in the pinned set and its segment
     files are never walked."""
-    from kafka_connect_opensearch_spark.operators.segments import (
-        SegmentMeta, SegmentStore)
+    from kafka_connect_opensearch_spark.operators.segments import SegmentStore
 
     if os.path.exists(snapshot_dir):
         raise FileExistsError(f"snapshot target exists: {snapshot_dir}")
@@ -93,62 +92,37 @@ def snapshot_index(index_dir: str, snapshot_dir: str) -> dict:
 
     store = SegmentStore(index_dir)
     batches = store.committed_batches()          # <-- the pin
-    live: dict[str, SegmentMeta] = {}
-    dead: set[str] = set()
-    for entry in batches.values():
-        for seg in entry.get("segments", []):
-            m = SegmentMeta(**seg)
-            if m.path and not os.path.isabs(m.path):
-                # snapshotting a snapshot/restored index: resolve its
-                # relative bulk paths against its own dir first
-                m.path = os.path.join(index_dir, m.path)
-            live[seg["name"]] = m
-        dead.update(entry.get("replaces", []))
-    active = [m for n, m in sorted(live.items()) if n not in dead]
+    active = store.active_segments(batches)
 
     os.makedirs(snapshot_dir)
     shutil.copy2(os.path.join(index_dir, "meta.json"),
                  os.path.join(snapshot_dir, "meta.json"))
     for m in active:
-        if m.path:
-            # Bulk (Hive-partitioned) layout: copy only this segment's
-            # seg=<name> partition dirs — in-flight partitions being
-            # written into the same bulk root are never touched.
-            rel = os.path.relpath(m.path, index_dir)
-            for sub in ("docs.parquet", "postings.parquet",
-                        "positions.parquet"):
-                src = os.path.join(m.path, sub, f"seg={m.name}")
-                if os.path.isdir(src):
-                    shutil.copytree(
-                        src, os.path.join(snapshot_dir, rel, sub,
-                                          f"seg={m.name}"))
-        else:
-            shutil.copytree(
-                store.segment_path(m.name),
-                os.path.join(snapshot_dir, "segments", m.name))
+        # copy only this segment's seg=<name> partition dirs — in-flight
+        # partitions being written into the same root are never touched
+        rel = os.path.relpath(m.path, index_dir)
+        for sub in ("docs.parquet", "postings.parquet", "positions.parquet"):
+            src = os.path.join(m.path, sub, f"seg={m.name}")
+            if os.path.isdir(src):
+                shutil.copytree(
+                    src, os.path.join(snapshot_dir, rel, sub, f"seg={m.name}"))
     # Manifests last: the snapshot becomes a valid index only once the
     # files it references are all in place (same write-then-commit
     # ordering as the live store).
-    # Bulk segment entries are rewritten to SNAPSHOT-RELATIVE paths (the
-    # same ``rel`` the file copy used): readers resolve them against the
+    # Segment entries are rewritten to SNAPSHOT-RELATIVE paths (the same
+    # ``rel`` the file copy used): readers resolve them against the
     # snapshot's own dir (SegmentStore.active_segments), so the snapshot
     # is self-contained — it never references the source index's files,
     # and restore_index copies keep working wherever they land.
     snap_store = SegmentStore(snapshot_dir)
     os.makedirs(snap_store.manifest_dir, exist_ok=True)
-    os.makedirs(snap_store.segments_dir, exist_ok=True)
     for batch_id, entry in batches.items():
         pinned = dict(entry)
-        segs_out = []
-        for seg in entry.get("segments", []):
-            seg = dict(seg)
-            if seg.get("path"):
-                p = seg["path"]
-                if not os.path.isabs(p):
-                    p = os.path.join(index_dir, p)
-                seg["path"] = os.path.relpath(p, index_dir)
-            segs_out.append(seg)
-        pinned["segments"] = segs_out
+        pinned["segments"] = [
+            {**seg, "path": os.path.relpath(
+                os.path.join(index_dir, seg["path"]), index_dir)}
+            for seg in entry.get("segments", [])
+        ]
         snap_store.commit_batch(batch_id, pinned)
     n_files = sum(len(fs) for _, _, fs in os.walk(snapshot_dir))
     return {"source": os.path.abspath(index_dir),

@@ -16,12 +16,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
 
 
-def explain_formatted(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle boundaries in the executed plan (AQE may reduce
     at runtime; this is the static count)."""

@@ -15,11 +15,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_connect_opensearch_spark.config import EngineConfig
 from kafka_connect_opensearch_spark.operators.indexer import (
-    _build_one_segment,
+    _build_segments_pipeline,
+    commit_segments,
     prepare_identity,
 )
 from kafka_connect_opensearch_spark.operators.segments import SegmentStore
@@ -106,14 +108,16 @@ def start_streaming_index_build(
             return
         if backpressure is not None:
             backpressure.before_batch(spark)
-        docs = prepare_identity(batch_df, id_cols, content_col)
+        # a one-segment wave under a root named for the batch
         seg_name = f"seg_s_{bid}"
-        meta = _build_one_segment(
-            spark, docs, store, seg_name, config, content_col=content_col
+        docs = prepare_identity(batch_df, id_cols, content_col).withColumn(
+            "seg", F.lit(seg_name)
         )
-        store.commit_batch(
-            bid, {"batch": bid, "segments": [meta.__dict__], "replaces": []}
+        metas, _ = _build_segments_pipeline(
+            docs, store.bulk_path(bid), config, content_col, job_tag=bid,
+            seg_names=[seg_name], generation=store.next_generation(),
         )
+        commit_segments(store, bid, metas, config)
         # a micro-batch can re-ingest docs already committed by an earlier
         # batch; reconcile makes latest-wins visible NOW (Lucene's
         # update-marks-deleted contract) instead of at the next tiered

@@ -3,6 +3,8 @@ micro-batched build: same doc counts, rank-identical BM25, mergeable."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -54,13 +56,18 @@ def test_bulk_resume_is_noop(spark, bulk_index):
     assert m2.segments_built == 0 and m2.batches_skipped == CFG.num_segments
 
 
-def test_bulk_segments_merge_to_classic(spark, bulk_index):
+def test_bulk_segments_merge_into_own_root(spark, bulk_index):
     store = SegmentStore(bulk_index)
-    assert all(s.path for s in store.active_segments())
+    roots_before = {s.path for s in store.active_segments()}
+    assert all(roots_before)
     m = merge_segments(spark, bulk_index, CFG)
     assert m.segments_merged == 4
     segs = store.active_segments()
-    assert len(segs) == 1 and segs[0].path == ""  # merged into classic layout
+    # the merged segment is written under a fresh root of its own
+    assert len(segs) == 1 and segs[0].path not in roots_before
+    assert os.path.isdir(
+        os.path.join(segs[0].path, "postings.parquet", f"seg={segs[0].name}")
+    )
     reader = IndexReader(spark, bulk_index)
     assert reader.doc_count() == N
     pdf = _oracle_pdf(N)

@@ -107,27 +107,18 @@ def test_merge_latest_wins_across_generations(spark, tmp_path):
     )
     cfg = EngineConfig(num_segments=1, salt_partitions=2)
     build_index(spark, v1, d, cfg)
-    # re-ingest doc a.py/c1 with different content into a new segment:
-    # same (repo,path,commit) identity → same doc_id
-    store = SegmentStore(d)
+    # re-ingest doc a.py/c1 with different content into a new segment (a
+    # later bulk load gets the next generation): same (repo,path,commit)
+    # identity → same doc_id
     v2 = spark.createDataFrame(
         [("r", "a.py", "c1", "py", "alpha omega omega")],
         "repo string, path string, commit string, lang string, content string",
     )
     from kafka_connect_opensearch_spark.operators.indexer import (
-        _build_one_segment,
-        prepare_documents,
+        build_index_bulk,
     )
 
-    seg2 = _build_one_segment(
-        spark, prepare_documents(v2), store, "seg_g1_reingest", cfg
-    )
-    seg2.generation = 1
-    store.write_segmeta(seg2)
-    store.commit_batch(
-        "reingest", {"batch": "reingest", "segments": [seg2.__dict__],
-                     "replaces": []}
-    )
+    build_index_bulk(spark, v2, d, cfg, tag="g1")
     merge_segments(spark, d, cfg)
     reader = IndexReader(spark, d)
     assert reader.doc_count() == 2
@@ -302,9 +293,8 @@ def test_reconcile_updates_makes_latest_wins_immediate(spark, tmp_path):
     both rows, stale phrases match) — reconcile_updates must restore
     latest-wins without being told which docs changed."""
     from kafka_connect_opensearch_spark.operators.indexer import (
-        _build_one_segment,
         build_index,
-        prepare_documents,
+        build_index_bulk,
     )
     from kafka_connect_opensearch_spark.operators.merge import (
         reconcile_updates,
@@ -321,19 +311,12 @@ def test_reconcile_updates_makes_latest_wins_immediate(spark, tmp_path):
     cfg = EngineConfig(num_segments=1, salt_partitions=2,
                        shuffle_partitions=2, index_positions=True)
     build_index(spark, v1, d, cfg, content_col="text", doc_id_col="doc_id")
-    store = SegmentStore(d)
+    # re-ingest doc 1 into a newer-generation segment (a later bulk load),
+    # with no reconcile
     v2 = spark.createDataFrame([(1, "alpha omega omega")],
                                "doc_id long, text string")
-    seg2 = _build_one_segment(
-        spark, prepare_documents(v2, content_col="text", doc_id_col="doc_id"),
-        store, "seg_g1_reingest", cfg, content_col="text",
-    )
-    seg2.generation = 1
-    store.write_segmeta(seg2)
-    store.commit_batch(
-        "reingest",
-        {"batch": "reingest", "segments": [seg2.__dict__], "replaces": []},
-    )
+    build_index_bulk(spark, v2, d, cfg, content_col="text",
+                     doc_id_col="doc_id", tag="g1")
     reader = IndexReader(spark, d)
     assert reader.doc_count() == 3          # the documented stale window
 
@@ -385,3 +368,87 @@ def test_streaming_update_latest_wins_without_manual_merge(spark, tmp_path):
     # the superseded content must be gone
     assert reader.match_count("alpha", "or") + \
         reader.match_count("beta", "or") == 0
+
+
+def test_every_write_uses_the_one_segment_layout(spark, tmp_path):
+    """Every writer — a fault-injected then resumed build_index, streamed
+    micro-batches whose re-emits reconcile against build segments and
+    then against the reconciled segment, a fast (disjoint) merge and a
+    delete merge — lays segments out under their own root: every active
+    segment has a ``path``, no ``segments/`` dir exists, and every
+    positions file carries the ``blk_max_doc`` skip column."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from kafka_connect_opensearch_spark.streaming.ingest import (
+        start_streaming_index_build,
+    )
+
+    schema = "repo string, path string, commit string, content string"
+    base = [("r", f"b{k}.py", "c1", f"alpha beta w{k % 3}") for k in range(12)]
+    cfg = EngineConfig(num_segments=3, salt_partitions=2,
+                       shuffle_partitions=4, index_positions=True)
+    d = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="fault injection"):
+        build_index(spark, spark.createDataFrame(base, schema), d, cfg,
+                    fail_after_batches=1)
+    m = build_index(spark, spark.createDataFrame(base, schema), d, cfg)
+    assert m.batches_skipped == 1
+
+    # two streamed batches re-emitting base keys → a per-batch reconcile
+    # with build segments, then one with the reconciled segment
+    src = str(tmp_path / "src")
+    for rows in (
+        [("r", "b0.py", "c1", "gamma delta"), ("r", "b5.py", "c1", "omega"),
+         ("r", "s0.py", "c1", "alpha gamma")],
+        [("r", "b0.py", "c1", "delta delta"), ("r", "b7.py", "c1", "gamma"),
+         ("r", "s1.py", "c1", "beta gamma")],
+    ):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            src, mode="append"
+        )
+    q = start_streaming_index_build(spark, src, schema, d,
+                                    str(tmp_path / "ckpt"), cfg,
+                                    max_files_per_trigger=1)
+    q.awaitTermination(300)
+    store = SegmentStore(d)
+    merges = [n for n in store.committed_batches() if n.startswith("merge_")]
+    assert len(merges) == 2
+    assert IndexReader(spark, d).doc_count() == 14
+
+    fast = merge_segments(spark, d, cfg)                 # disjoint path
+    assert fast.docs_indexed == 14
+    deletes = spark.createDataFrame(
+        [(DOC_KEY_SEP.join(("r", "b1.py", "c1")),)], "doc_key string"
+    )
+    merge_segments(spark, d, cfg, delete_doc_keys=deletes)
+    reader = IndexReader(spark, d)
+    assert reader.doc_count() == 13
+    assert reader.match_count("omega", "or") == 1
+
+    assert all(s.path for s in store.active_segments())
+    assert not glob.glob(os.path.join(d, "**", "segments"), recursive=True)
+    pos_files = glob.glob(
+        os.path.join(d, "*", "positions.parquet", "**", "*.parquet"),
+        recursive=True,
+    )
+    assert pos_files
+    for f in pos_files:
+        assert "blk_max_doc" in pq.read_schema(f).names, f
+
+
+def test_classic_layout_index_is_refused(tmp_path):
+    """An index whose manifest still names a per-segment-layout segment
+    (empty ``path``) is refused with a rebuild hint, not misread."""
+    store = SegmentStore(str(tmp_path / "old"))
+    store.create_if_absent({"positions": False})
+    store.commit_batch("b0000", {
+        "batch": "b0000", "replaces": [],
+        "segments": [{"name": "seg_g0_b0000", "generation": 0,
+                      "doc_count": 3, "sum_dl": 9, "n_terms": 4,
+                      "n_postings": 6, "path": ""}],
+    })
+    with pytest.raises(ValueError, match="seg_g0_b0000.*rebuild"):
+        store.active_segments()

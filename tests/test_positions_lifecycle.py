@@ -1,11 +1,11 @@
 """Positional store under the segment lifecycle.
 
-Pins the round-3 contract: positions are built per segment by the same
-pipelines as the frequency postings (classic AND bulk/wave layouts),
-participate in log-structured merges (latest-wins across generations +
-tombstone deletes, so phrase queries can never go stale), and queries run
-either coordinator-local or distributed per doc-disjoint (seg, part)
-group with identical results.
+Pins the round-3 contract: positions are written per segment by the
+same writer as the frequency postings (bulk, wave, streamed and merged
+segments alike), participate in log-structured merges (latest-wins
+across generations + tombstone deletes, so phrase queries can never go
+stale), and queries run either coordinator-local or distributed per
+doc-disjoint (seg, part) group with identical results.
 """
 
 from __future__ import annotations
@@ -14,9 +14,8 @@ from pyspark.sql import SparkSession
 
 from kafka_connect_opensearch_spark.config import EngineConfig
 from kafka_connect_opensearch_spark.operators.indexer import (
-    _build_one_segment,
     build_index,
-    prepare_documents,
+    build_index_bulk,
 )
 from kafka_connect_opensearch_spark.operators.merge import merge_segments
 from kafka_connect_opensearch_spark.operators.positions import PositionsReader
@@ -133,22 +132,13 @@ def test_positions_follow_merge_latest_wins_and_deletes(spark, tmp_path):
     cfg = EngineConfig(num_segments=1, salt_partitions=2,
                        shuffle_partitions=2, index_positions=True)
     build_index(spark, v1, d, cfg, content_col="text", doc_id_col="doc_id")
-    store = SegmentStore(d)
 
-    # re-ingest doc 1 with changed content into a generation-1 segment
+    # re-ingest doc 1 with changed content into a generation-1 segment (a
+    # later bulk load)
     v2 = spark.createDataFrame([(1, "alpha omega omega")],
                                "doc_id long, text string")
-    seg2 = _build_one_segment(
-        spark,
-        prepare_documents(v2, content_col="text", doc_id_col="doc_id"),
-        store, "seg_g1_reingest", cfg, content_col="text",
-    )
-    seg2.generation = 1
-    store.write_segmeta(seg2)
-    store.commit_batch(
-        "reingest",
-        {"batch": "reingest", "segments": [seg2.__dict__], "replaces": []},
-    )
+    build_index_bulk(spark, v2, d, cfg, content_col="text",
+                     doc_id_col="doc_id", tag="g1")
     merge_segments(spark, d, cfg)
     pr = PositionsReader(spark, d)
     assert _ids(pr.phrase_docs("alpha beta")) == [2]     # old gen shadowed
@@ -453,3 +443,106 @@ def test_canonical_key_cache_parity(spark, tmp_path):
     slow._canon_ready = lambda: False
     a2, b2 = probe(fast), probe(slow)
     assert a2 == b2
+
+
+_STREAM_VOCAB = ("alpha", "beta", "gamma", "delta", "omega")
+_STREAM_SCHEMA = "repo string, path string, commit string, content string"
+
+
+def _phrase_oracle(toks: dict[int, list[str]], phrase: str) -> list[int]:
+    q = phrase.split()
+    return sorted(
+        d for d, ts in toks.items()
+        if any(ts[i:i + len(q)] == q for i in range(len(ts)))
+    )
+
+
+def _near_oracle(toks: dict[int, list[str]], a: str, b: str,
+                 slop: int) -> list[int]:
+    return sorted(
+        d for d, ts in toks.items()
+        if any(abs(i - j) <= slop
+               for i, x in enumerate(ts) if x == a
+               for j, y in enumerate(ts) if y == b)
+    )
+
+
+def test_streamed_reemits_reconcile_and_auto_merge_with_positions(
+    spark, tmp_path
+):
+    """Three streamed files re-emit earlier keys into a positions-on index
+    that also holds a build_index segment. Every per-batch reconcile and
+    the closing auto_merge union merged segments with fresh ones, so
+    merged positions must keep their skip columns; after every round
+    and after the merge, doc_count is the latest-wins key count and
+    phrase/NEAR doc sets (local and distributed) equal a token-position
+    oracle."""
+    import random
+
+    from kafka_connect_opensearch_spark.config import DOC_KEY_SEP
+    from kafka_connect_opensearch_spark.functions.analysis import tokenize_py
+    from kafka_connect_opensearch_spark.operators.bm25 import IndexReader
+    from kafka_connect_opensearch_spark.operators.indexer import doc_id_py
+    from kafka_connect_opensearch_spark.operators.merge import auto_merge
+    from kafka_connect_opensearch_spark.streaming.ingest import (
+        start_streaming_index_build,
+    )
+
+    rng = random.Random(7)
+
+    def row(prefix: str, k: int) -> tuple:
+        n = rng.randint(3, 9)
+        text = " ".join(rng.choice(_STREAM_VOCAB) for _ in range(n))
+        return ("r", f"{prefix}{k}.py", "c1", text)
+
+    # merge_factor=2 puts the 20-doc build segment and the 26-doc
+    # reconciled stream segment in one tier, so auto_merge has work
+    cfg = EngineConfig(num_segments=1, salt_partitions=2,
+                       shuffle_partitions=4, index_positions=True,
+                       merge_factor=2)
+    idx = str(tmp_path / "idx")
+    base = [row("b", k) for k in range(20)]
+    build_index(spark, spark.createDataFrame(base, _STREAM_SCHEMA), idx, cfg)
+    rounds = [
+        [row("s", k) for k in range(12)],
+        [row("s", k) for k in range(12, 20)]
+        + [row("s", k) for k in (0, 3, 5)],             # re-emit round 0
+        [row("s", k) for k in range(20, 26)]
+        + [row("s", k) for k in (3, 14, 7)],            # re-emit rounds 0-1
+    ]
+    latest = {r[:3]: r[3] for r in base}
+
+    def check():
+        toks = {
+            doc_id_py(DOC_KEY_SEP.join(k)): tokenize_py(text)
+            for k, text in latest.items()
+        }
+        assert IndexReader(spark, idx).doc_count() == len(latest)
+        pr = PositionsReader(spark, idx)
+        for phrase in ("alpha beta", "beta gamma delta", "omega alpha"):
+            want = _phrase_oracle(toks, phrase)
+            assert pr.phrase_match_ids(phrase) == want
+            assert _ids(pr.phrase_docs(phrase, local_threshold=0)) == want
+        for a, b, slop in (("alpha", "delta", 2), ("gamma", "omega", 1)):
+            want = _near_oracle(toks, a, b, slop)
+            assert pr.near_match_ids(a, b, slop) == want
+            assert _ids(pr.near_docs(a, b, slop, local_threshold=0)) == want
+
+    src = str(tmp_path / "src")
+    for i, rows in enumerate(rounds):
+        spark.createDataFrame(rows, _STREAM_SCHEMA).coalesce(1).write.parquet(
+            src, mode="append"
+        )
+        q = start_streaming_index_build(
+            spark, src, _STREAM_SCHEMA, idx, str(tmp_path / "ckpt"), cfg,
+            max_files_per_trigger=1,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None, f"round {i}: {q.exception()}"
+        latest.update({r[:3]: r[3] for r in rows})
+        check()
+
+    m = auto_merge(spark, idx, cfg)
+    assert m.segments_merged == 2
+    assert len(SegmentStore(idx).active_segments()) == 1
+    check()

@@ -79,7 +79,7 @@ def test_merge_postings_empty():
 
 
 def test_positions_store_phrase_match(spark, tmp_path):
-    """Positional store (classic per-segment layout): build → phrase/
+    """Positional store (single-segment build): build → phrase/
     single/missing-term queries match a direct token-adjacency reference
     over the same docs."""
     from kafka_connect_opensearch_spark.config import EngineConfig
